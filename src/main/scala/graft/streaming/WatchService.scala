@@ -1,7 +1,10 @@
 package graft.streaming
 
+import java.security.MessageDigest
+
 import graft.Ckpt.CutOps
-import org.apache.hadoop.fs.Path
+import org.apache.hadoop.conf.Configuration
+import org.apache.hadoop.fs.{ChecksumException, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -71,6 +74,47 @@ object WatchService {
   def durableArrivals(stream: DataFrame): DataFrame =
     stream.filter(!col("path").endsWith("-tmp-Data.db"))
 
+  // ---- object byte I/O: every read of a file's bytes goes here ----
+
+  /** Absolute paths of the watch roots, without trailing slash. */
+  private def watchRoots(dataDirs: Seq[String]): Seq[String] =
+    dataDirs.map(d => new Path(d).toUri.getPath.stripSuffix("/"))
+
+  /** Object key of `src`: its path relative to the watch root that
+    * contains it (the absolute path sans leading slash when none does).
+    */
+  private def objectKey(rootsAbs: Seq[String], src: String): String = {
+    val abs = new Path(src).toUri.getPath
+    rootsAbs.collectFirst {
+      case r if abs.startsWith(r + "/") => abs.stripPrefix(r + "/")
+    }.getOrElse(abs.stripPrefix("/"))
+  }
+
+  /** Stream `src` through MD5 in 64 KiB reads, also writing each read
+    * to `dst` (created, overwriting) when one is given — a copy and
+    * its digest cost one read. Returns the lowercase-hex digest, or
+    * null when `src` no longer exists (the reference's ENOENT
+    * tolerance: callers record the file as vanished, not failed).
+    * `dst` is created only once `src` is open, so a vanished source
+    * leaves no empty object behind. Other IO errors propagate.
+    */
+  private def streamMd5(conf: Configuration, src: Path, dst: Option[Path]): String =
+    try {
+      val md = MessageDigest.getInstance("MD5")
+      val in = src.getFileSystem(conf).open(src)
+      try {
+        val out = dst.map(d => d.getFileSystem(conf).create(d, true))
+        try {
+          val buf = new Array[Byte](64 * 1024)
+          var n = in.read(buf)
+          while (n >= 0) {
+            md.update(buf, 0, n); out.foreach(_.write(buf, 0, n)); n = in.read(buf)
+          }
+        } finally out.foreach(_.close())
+      } finally in.close()
+      md.digest().map("%02x".format(_)).mkString
+    } catch { case _: java.io.FileNotFoundException => null }
+
   /** One micro-batch of the upload loop: copy every discovered file
     * to `<objects>/<path relative to its watch root>` on executors,
     * then append the per-batch manifest. Returns the manifest rows.
@@ -83,47 +127,22 @@ object WatchService {
       batchId: Long): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val rootsAbs = dataDirs.map(d => new Path(d).toUri.getPath.stripSuffix("/"))
+    val rootsAbs = watchRoots(dataDirs)
     val objectsPath = target.objectsPath
     val copied = batch.select(col("path"), col("length")).as[(String, Long)]
       .mapPartitions { it =>
         // Configuration is not serializable; rebuild per task like
         // any Hadoop-backed scan does
-        val conf = new org.apache.hadoop.conf.Configuration()
+        val conf = new Configuration()
         it.map { case (src, len) =>
-          val srcPath = new Path(src)
-          val abs = srcPath.toUri.getPath
-          val rel = rootsAbs.collectFirst {
-            case r if abs.startsWith(r + "/") => abs.stripPrefix(r + "/")
-          }.getOrElse(abs.stripPrefix("/"))
-          val dst = new Path(objectsPath, rel)
-          try {
-            val sfs = srcPath.getFileSystem(conf)
-            val dfs = dst.getFileSystem(conf)
-            // hash WHILE copying — the bytes are streaming through
-            // anyway, so the content digest the manifest needs for
-            // post-upload fsck costs no extra read
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val in = sfs.open(srcPath)
-            try {
-              val out = dfs.create(dst, true)
-              try {
-                val buf = new Array[Byte](64 * 1024)
-                var n = in.read(buf)
-                while (n >= 0) {
-                  md.update(buf, 0, n); out.write(buf, 0, n); n = in.read(buf)
-                }
-              } finally out.close()
-            } finally in.close()
-            val hex = md.digest().map("%02x".format(_)).mkString
-            (rel, len, "uploaded", hex)
-          } catch {
-            // the reference skips files that vanish between listing
-            // and upload (compaction deleted them) instead of failing
-            // the whole pass
-            case _: java.io.FileNotFoundException =>
-              (rel, len, "skipped_vanished", null: String)
-          }
+          val rel = objectKey(rootsAbs, src)
+          // hash WHILE copying — the bytes are streaming through
+          // anyway, so the content digest the manifest needs for
+          // post-upload fsck costs no extra read. The reference skips
+          // files that vanish between listing and upload (compaction
+          // deleted them) instead of failing the whole pass.
+          val hex = streamMd5(conf, new Path(src), Some(new Path(objectsPath, rel)))
+          (rel, len, if (hex == null) "skipped_vanished" else "uploaded", hex)
         }
       }
       .toDF("path", "size_bytes", "status", "md5")
@@ -139,25 +158,38 @@ object WatchService {
     results
   }
 
-  /** Start the watch daemon. `Trigger.AvailableNow` gives a bounded
-    * "catch up then stop" run (used by tests and `--once`);
-    * `Trigger.ProcessingTime` is the always-on daemon. The checkpoint
-    * makes restarts incremental.
-    */
-  def start(spark: SparkSession, dataDir: String, targetUrl: String,
-      trigger: Trigger, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): StreamingQuery =
-    startAll(spark, Seq(dataDir), targetUrl, trigger, checkpoint, sourceOptions)
-
-  /** Watch SEVERAL roots with one daemon — the reference accepts a
-    * repeatable `--path` and iterates the list
+  /** Start the watch daemon over one or more roots. The reference
+    * accepts a repeatable `--path` and iterates the list
     * (`bin/cassandra-syncer:195-201`); here the per-root arrival
     * streams union into one stream, so a single checkpoint covers all
     * roots and each micro-batch may carry files from any of them.
+    * `Trigger.AvailableNow` gives a bounded "catch up then stop" run
+    * (used by tests and `--once`); `Trigger.ProcessingTime` is the
+    * always-on daemon. The checkpoint makes restarts incremental.
     */
   def startAll(spark: SparkSession, dataDirs: Seq[String], targetUrl: String,
       trigger: Trigger, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): StreamingQuery = {
+      sourceOptions: Map[String, String] = Map.empty): StreamingQuery =
+    startWith(spark, dataDirs, targetUrl, trigger, checkpoint, sourceOptions) {
+      (b, target, id) => uploadBatch(b, dataDirs, target, id); ()
+    }
+
+  /** One bounded pass ([[startAll]] under AvailableNow): process
+    * everything not yet uploaded, then return. Calling it again after
+    * new files arrive uploads only the new files (checkpointed offsets).
+    */
+  def runOnceAll(spark: SparkSession, dataDirs: Seq[String], targetUrl: String,
+      checkpoint: Option[String] = None): Unit =
+    drain(startAll(spark, dataDirs, targetUrl, Trigger.AvailableNow(), checkpoint))
+
+  /** The durable arrival stream over every root, driving `body` once
+    * per micro-batch — the wiring shared by the plain and the
+    * dedup-gated daemon, which differ only in the batch body.
+    */
+  private def startWith(spark: SparkSession, dataDirs: Seq[String],
+      targetUrl: String, trigger: Trigger, checkpoint: Option[String],
+      sourceOptions: Map[String, String])(
+      body: (DataFrame, Target, Long) => Unit): StreamingQuery = {
     require(dataDirs.nonEmpty, "at least one watch root required")
     val target = Target.parse(targetUrl)
     val arrivals = dataDirs.map(d => arrivalStream(spark, d, sourceOptions))
@@ -167,26 +199,13 @@ object WatchService {
       .option("checkpointLocation",
         checkpoint.getOrElse(target.watchCheckpointPath))
       .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        uploadBatch(b, dataDirs, target, id); ()
-      }
+      .foreachBatch { (b: DataFrame, id: Long) => body(b, target, id) }
       .start()
   }
 
-  /** One bounded pass: process everything not yet uploaded, then
-    * return. Calling it again after new files arrive uploads only the
-    * new files (checkpointed offsets).
-    */
-  def runOnce(spark: SparkSession, dataDir: String, targetUrl: String,
-      checkpoint: Option[String] = None): Unit =
-    runOnceAll(spark, Seq(dataDir), targetUrl, checkpoint)
-
-  /** Bounded multi-root pass ([[startAll]] under AvailableNow). */
-  def runOnceAll(spark: SparkSession, dataDirs: Seq[String], targetUrl: String,
-      checkpoint: Option[String] = None): Unit = {
-    val q = startAll(spark, dataDirs, targetUrl, Trigger.AvailableNow(), checkpoint)
+  /** Wait out a bounded (AvailableNow) query, stopping it either way. */
+  private def drain(q: StreamingQuery): Unit =
     try q.awaitTermination() finally q.stop()
-  }
 
   /** Read back the cumulative watch manifest (all batches). */
   def manifest(spark: SparkSession, targetUrl: String): DataFrame =
@@ -217,26 +236,14 @@ object WatchService {
       .select(col("path"), col("size_bytes"), col("md5").as("stored_md5"))
     val actual = stored.select(col("path")).as[String]
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val buf = new Array[Byte](64 * 1024)
+        val conf = new Configuration()
         it.map { rel =>
-          val p = new Path(objectsPath, rel)
-          try {
-            val fs = p.getFileSystem(conf)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val in = fs.open(p)
-            try {
-              var n = in.read(buf)
-              while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-            (rel, md.digest().map("%02x".format(_)).mkString)
-          } catch {
-            case _: java.io.FileNotFoundException => (rel, null: String)
+          try (rel, streamMd5(conf, new Path(objectsPath, rel), None))
+          catch {
             // the filesystem's own transport checksum already proves
             // the bytes changed; the sentinel never matches an md5
             // hex, so the verdict below lands on "corrupt"
-            case _: org.apache.hadoop.fs.ChecksumException =>
-              (rel, "transport-checksum-mismatch")
+            case _: ChecksumException => (rel, "transport-checksum-mismatch")
           }
         }
       }.toDF("path", "actual_md5")
@@ -318,35 +325,27 @@ object WatchService {
     * index keeper wins.
     */
   def dedupGatedBatch(batch: DataFrame, dataDirs: Seq[String], target: Target,
-      batchId: Long): Unit = {
+      batchId: Long): Unit =
+    dedupApply(dedupGate(batch, dataDirs, target, batchId), target, batchId)
+
+  /** The gate half of [[dedupGatedBatch]]: per-arrival verdicts
+    * (`src, path, size_bytes, digest, verdict, keeper_path`), frozen
+    * by an eager checkpoint so the copy and writes of [[dedupApply]]
+    * read them exactly once.
+    */
+  private[graft] def dedupGate(batch: DataFrame, dataDirs: Seq[String],
+      target: Target, batchId: Long): DataFrame = {
     val spark = batch.sparkSession
     import spark.implicits._
-    val rootsAbs = dataDirs.map(d => new Path(d).toUri.getPath.stripSuffix("/"))
+    val rootsAbs = watchRoots(dataDirs)
     // 1. content digest per arrival — hash-only executor pass (the
-    // gate must see the digest BEFORE deciding whether to copy)
+    // gate must see the digest BEFORE deciding whether to copy); a
+    // file vanished between listing and hashing gets a null digest
     val hashed = batch.select(col("path"), col("length")).as[(String, Long)]
       .mapPartitions { it =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val buf = new Array[Byte](64 * 1024)
+        val conf = new Configuration()
         it.map { case (src, len) =>
-          val srcPath = new Path(src)
-          val abs = srcPath.toUri.getPath
-          val rel = rootsAbs.collectFirst {
-            case r if abs.startsWith(r + "/") => abs.stripPrefix(r + "/")
-          }.getOrElse(abs.stripPrefix("/"))
-          try {
-            val fs = srcPath.getFileSystem(conf)
-            val md = java.security.MessageDigest.getInstance("MD5")
-            val in = fs.open(srcPath)
-            try {
-              var n = in.read(buf)
-              while (n >= 0) { md.update(buf, 0, n); n = in.read(buf) }
-            } finally in.close()
-            (src, rel, len, md.digest().map("%02x".format(_)).mkString)
-          } catch {
-            // ENOENT tolerance: vanished between listing and hashing
-            case _: java.io.FileNotFoundException => (src, rel, len, null: String)
-          }
+          (src, objectKey(rootsAbs, src), len, streamMd5(conf, new Path(src), None))
         }
       }.toDF("src", "path", "size_bytes", "digest")
     // 2. probe the persisted index, excluding this batch's own subdir
@@ -370,8 +369,8 @@ object WatchService {
     val batchKeepers = probed
       .filter(col("idx_keeper").isNull && col("digest").isNotNull)
       .groupBy(col("digest")).agg(min(col("path")).as("batch_keeper"))
-    // run-once fence before the side-effecting copy + two writes below
-    val verdicts = probed.join(batchKeepers, Seq("digest"), "left_outer")
+    // run-once fence before the side-effecting copy + two writes
+    probed.join(batchKeepers, Seq("digest"), "left_outer")
       .select(col("src"), col("path"), col("size_bytes"), col("digest"),
         when(col("digest").isNull, lit("skipped_vanished"))
           .when(col("idx_keeper").isNotNull, lit("duplicate"))
@@ -382,68 +381,58 @@ object WatchService {
           .when(col("path") === col("batch_keeper"), lit(null).cast("string"))
           .otherwise(col("batch_keeper")).as("keeper_path"))
       .cutLineage(eager = true)
-    // 4. copy ONLY accepted files (overwrite target: a retried batch's
-    // re-copy is byte-idempotent)
+  }
+
+  /** The apply half of [[dedupGatedBatch]]: copy every accepted
+    * keeper into the object store (overwrite target: a retried batch's
+    * re-copy is byte-idempotent), then write the verdict manifest and
+    * append the landed keepers' digests to the index. The verdict
+    * follows the copy: a keeper whose source vanished after the gate
+    * hashed it is recorded `skipped_vanished` and never indexed, so a
+    * later file with the same bytes is accepted and copied instead of
+    * being marked a duplicate of content the store does not hold.
+    */
+  private[graft] def dedupApply(verdicts: DataFrame, target: Target,
+      batchId: Long): Unit = {
+    val spark = verdicts.sparkSession
+    import spark.implicits._
     val objectsPath = target.objectsPath
-    verdicts.filter(col("verdict") === "accepted")
-      .select(col("src"), col("path")).as[(String, String)]
-      .foreachPartition { (it: Iterator[(String, String)]) =>
-        val conf = new org.apache.hadoop.conf.Configuration()
-        val buf = new Array[Byte](64 * 1024)
-        it.foreach { case (src, rel) =>
-          val s = new Path(src)
-          val d = new Path(objectsPath, rel)
-          try {
-            val sfs = s.getFileSystem(conf)
-            val in = sfs.open(s)
-            try {
-              val out = d.getFileSystem(conf).create(d, true)
-              try {
-                var n = in.read(buf)
-                while (n >= 0) { out.write(buf, 0, n); n = in.read(buf) }
-              } finally out.close()
-            } finally in.close()
-          } catch { case _: java.io.FileNotFoundException => () }
+    val landed = verdicts.as[(String, String, Long, String, String, String)]
+      .mapPartitions { it =>
+        val conf = new Configuration()
+        it.map { case v @ (src, rel, len, _, verdict, keeper) =>
+          if (verdict != "accepted" ||
+              streamMd5(conf, new Path(src), Some(new Path(objectsPath, rel))) != null) v
+          else (src, rel, len, null: String, "skipped_vanished", keeper)
         }
-      }
-    // 5. verdict manifest + accepted digests into the index
-    verdicts.select(col("path"), col("size_bytes"), col("digest"),
+      }.toDF("src", "path", "size_bytes", "digest", "verdict", "keeper_path")
+      // the copy is a side effect: fence it so the two writes below
+      // read the frozen verdicts instead of copying again
+      .cutLineage(eager = true)
+    landed.select(col("path"), col("size_bytes"), col("digest"),
         col("verdict"), col("keeper_path"), lit(batchId).as("batch_id"))
       .write.mode("overwrite").parquet(s"${target.dedupManifestsPath}/bid_$batchId")
-    verdicts.filter(col("verdict") === "accepted")
+    landed.filter(col("verdict") === "accepted")
       .select(col("digest"), col("path").as("keeper_path"))
       .write.mode("overwrite").parquet(s"${target.dedupIndexPath}/bid_$batchId")
   }
 
-  /** Start the dedup-gated watch daemon ([[startAll]] with
+  /** Start the dedup-gated watch daemon ([[startAll]]'s wiring with
     * [[dedupGatedBatch]] as the per-batch body).
     */
   def startDedupGated(spark: SparkSession, dataDirs: Seq[String],
       targetUrl: String, trigger: Trigger, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): StreamingQuery = {
-    require(dataDirs.nonEmpty, "at least one watch root required")
-    val target = Target.parse(targetUrl)
-    val arrivals = dataDirs.map(d => arrivalStream(spark, d, sourceOptions))
-      .reduce(_ unionByName _)
-    durableArrivals(arrivals)
-      .writeStream
-      .option("checkpointLocation",
-        checkpoint.getOrElse(target.watchCheckpointPath))
-      .trigger(trigger)
-      .foreachBatch { (b: DataFrame, id: Long) =>
-        dedupGatedBatch(b, dataDirs, target, id)
-      }
-      .start()
-  }
+      sourceOptions: Map[String, String] = Map.empty): StreamingQuery =
+    startWith(spark, dataDirs, targetUrl, trigger, checkpoint, sourceOptions) {
+      (b, target, id) => dedupGatedBatch(b, dataDirs, target, id)
+    }
 
   /** Bounded dedup-gated pass (AvailableNow; checkpointed resume). */
   def runOnceDedupGated(spark: SparkSession, dataDirs: Seq[String],
       targetUrl: String, checkpoint: Option[String] = None,
-      sourceOptions: Map[String, String] = Map.empty): Unit = {
-    val q = startDedupGated(spark, dataDirs, targetUrl,
-      Trigger.AvailableNow(), checkpoint, sourceOptions)
-    try q.awaitTermination() finally q.stop()
-  }
+      sourceOptions: Map[String, String] = Map.empty): Unit =
+    drain(startDedupGated(spark, dataDirs, targetUrl,
+      Trigger.AvailableNow(), checkpoint, sourceOptions))
 
   /** Cumulative dedup-gate verdict manifest (all batches). */
   def dedupManifest(spark: SparkSession, targetUrl: String): DataFrame =
@@ -457,6 +446,20 @@ object WatchService {
 
   private val watched = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
+  /** The memoized watch-run fixture target (shared by the watch and
+    * fsck oracle surfaces — one daemon pass per corpus per JVM).
+    */
+  def watchOracleTarget(spark: SparkSession, dir: String): String =
+    watched.computeIfAbsent(dir, d => {
+      val tree = graft.syncer.FsInventory.oracleTree(spark, d)
+      // per-process root: no cross-JVM clobbering, removed at exit
+      val root = graft.TmpDirs.cleanupOnExit(java.nio.file.Files
+        .createTempDirectory("graft_watch_oracle_")).toString
+      val url = s"directory://$root"
+      runOnceAll(spark, Seq(tree), url)
+      url
+    })
+
   /** §2 beyond-survey oracle surface: run the daemon once (bounded)
     * over the real fs_inventory fixture tree, then emit the uploaded
     * set parsed back to the inventory relation — must equal the
@@ -464,20 +467,6 @@ object WatchService {
     * The watch run is memoized per corpus per JVM (it is the fixture
     * side; the measured query is the manifest read-back + parse).
     */
-  /** The memoized watch-run fixture target (shared by the watch and
-    * fsck oracle surfaces — one daemon pass per corpus per JVM).
-    */
-  def watchOracleTarget(spark: SparkSession, dir: String): String =
-    watched.computeIfAbsent(dir, d => {
-      val tree = graft.syncer.FsInventory.oracleTree(spark, d)
-      // per-process root: no cross-JVM clobbering, no hashCode collisions
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_watch_oracle_").toString
-      val url = s"directory://$root"
-      runOnce(spark, tree, url)
-      url
-    })
-
   def watchServiceQuery(spark: SparkSession, dir: String): DataFrame = {
     val targetUrl = watchOracleTarget(spark, dir)
     val re = "ks1/([^/]+)/node(\\d+)/na-(\\d+)-Data\\.db$"

@@ -119,7 +119,7 @@ object BackupPipeline {
         lit(null).cast("long").as("size_bytes"),
         lit(1).as("tag"))
     val files = durable.withColumn("tag", lit(0))
-    val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
+    val w = SyncOps.lineage
       .orderBy(col("snap_date"), col("tag"), col("generation"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     files.unionByName(grid)
@@ -140,17 +140,24 @@ object BackupPipeline {
         "path STRING, size_bytes BIGINT, manifest_date DATE")
       .json(target.manifestsPath)
 
+  /** The rows of the newest manifest in `m` (its max `manifest_date`,
+    * a one-row broadcast).
+    */
+  private def latestManifest(m: DataFrame): DataFrame =
+    m.join(broadcast(m.agg(max(col("manifest_date")).as("manifest_date"))),
+      Seq("manifest_date"))
+
   /** Restore phase: the newest manifest at or before `asOf`, i.e. the
     * minimum file set that reconstructs that point in time.
     */
-  def restoreSet(spark: SparkSession, targetUrl: String, asOf: String): DataFrame = {
-    val m = manifests(spark, Target.parse(targetUrl))
-      .filter(col("manifest_date") <= lit(asOf).cast("date"))
-    val latest = m.agg(max(col("manifest_date")).as("manifest_date"))
-    m.join(broadcast(latest), Seq("manifest_date"))
+  def restoreSet(spark: SparkSession, targetUrl: String, asOf: String): DataFrame =
+    latestManifest(manifests(spark, Target.parse(targetUrl))
+        .filter(col("manifest_date") <= lit(asOf).cast("date")))
       .select(col("cf"), col("node_id"), col("shard_id"),
         col("generation"), col("path"), col("size_bytes"))
-  }
+
+  private val backupOracleTargets =
+    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** §2.1#60 oracle surface: full backup to a directory target, then
     * the storage-side restore set as of 2024-01-15 — the reference's
@@ -160,7 +167,8 @@ object BackupPipeline {
     * SQL computes.
     */
   def backupPipelineQuery(spark: SparkSession, dir: String): DataFrame = {
-    val url = "directory:///tmp/graft_backup_oracle"
+    val url = backupOracleTargets.computeIfAbsent(dir, d =>
+      "directory://" + graft.TmpDirs.perJvmStoreRoot("graft_backup_oracle", d))
     backup(spark, dir, url)
     restoreSet(spark, url, "2024-01-15")
       .orderBy(col("cf"), col("node_id"), col("shard_id"))
@@ -358,13 +366,13 @@ object BackupPipeline {
     */
   def syncRestoreResume(spark: SparkSession, dir: String): DataFrame = {
     val url = resumeTargets.computeIfAbsent(dir, d => {
-      val root = java.nio.file.Files
-        .createTempDirectory("graft_restore_resume_").toString
+      val root = graft.TmpDirs.cleanupOnExit(java.nio.file.Files
+        .createTempDirectory("graft_restore_resume_")).toString
       val u = s"directory://$root"
       backup(spark, d, u)
       val n = restoreSet(spark, u, "2024-01-15").count().toInt
-      val dest = java.nio.file.Files
-        .createTempDirectory("graft_restore_dest_").toString
+      val dest = graft.TmpDirs.cleanupOnExit(java.nio.file.Files
+        .createTempDirectory("graft_restore_dest_")).toString
       runRestorePass(spark, u, "2024-01-15", dest, Some(n / 2))
       u
     })
@@ -378,9 +386,7 @@ object BackupPipeline {
   def prunePlan(spark: SparkSession, targetUrl: String, cutoff: String): DataFrame = {
     val target = Target.parse(targetUrl)
     val objects = spark.read.parquet(target.objectsPath)
-    val m = manifests(spark, target)
-    val latest = m.join(broadcast(m.agg(max(col("manifest_date")).as("manifest_date"))),
-      Seq("manifest_date")).select(col("path"))
+    val latest = latestManifest(manifests(spark, target)).select(col("path"))
     objects
       .filter(col("snap_date") < lit(cutoff).cast("date"))
       .join(latest, Seq("path"), "left_anti")

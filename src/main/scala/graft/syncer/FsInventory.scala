@@ -106,14 +106,6 @@ object FsInventory {
   def durable(spark: SparkSession, root: String): DataFrame =
     inventory(spark, root).filter(!col("is_temp"))
 
-  /** Oracle surface: materialize a BOUNDED slice of the model
-    * inventory (generation ≤ 1500 — ~1.5k files, a few MB) as a real
-    * directory tree, walk it back through the distributed lister, and
-    * emit the parsed relation. Proves the real-filesystem source
-    * round-trips paths, temp flags, and sizes against the same oracle
-    * SQL that checks the events-derived model. (mtime is excluded —
-    * real file mtimes are write times.)
-    */
   private val treeBuilt = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Materialize (once per corpus per JVM) the bounded model
@@ -124,8 +116,9 @@ object FsInventory {
     */
   def oracleTree(spark: SparkSession, dir: String): String =
     treeBuilt.computeIfAbsent(dir, d => {
-      val root = new Path(
-        "/tmp/graft_fsinv_oracle_" + Integer.toHexString(d.hashCode))
+      // unique per JVM and removed at exit: a concurrent JVM building
+      // the same corpus's tree can never delete this one mid-read
+      val root = new Path(graft.TmpDirs.perJvmStoreRoot("graft_fsinv_oracle", d))
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       fs.delete(root, true)
       val rows = FileInventory.inventory(spark, d)
@@ -139,6 +132,14 @@ object FsInventory {
       root.toString
     })
 
+  /** Oracle surface: materialize a BOUNDED slice of the model
+    * inventory (generation ≤ 1500 — ~1.5k files, a few MB) as a real
+    * directory tree, walk it back through the distributed lister, and
+    * emit the parsed relation. Proves the real-filesystem source
+    * round-trips paths, temp flags, and sizes against the same oracle
+    * SQL that checks the events-derived model. (mtime is excluded —
+    * real file mtimes are write times.)
+    */
   def fsInventoryQuery(spark: SparkSession, dir: String): DataFrame = {
     val rootStr = oracleTree(spark, dir)
     inventory(spark, rootStr)

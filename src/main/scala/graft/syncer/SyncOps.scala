@@ -1,7 +1,7 @@
 package graft.syncer
 
 import graft.Ckpt.CutOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -27,25 +27,38 @@ object SyncOps {
     * key; one shuffle on the bounded lineage key.
     */
   def syncLiveSet(spark: SparkSession, dir: String): DataFrame =
-    liveSetOf(FileInventory.durable(spark, dir))
+    byLineage(liveSetOf(FileInventory.durable(spark, dir)))
+
+  /** The compaction lineage: a file supersedes only lower generations
+    * of its own (cf, node, shard). [[liveSetOf]] and
+    * [[BackupPipeline]]'s manifest backfill both window over it.
+    */
+  private[syncer] val lineage = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
 
   /** [[syncLiveSet]] over ANY durable inventory relation (the
-    * events-derived model or a real [[FsInventory]] tree).
+    * events-derived model or a real [[FsInventory]] tree), unordered.
     * `extraCols` carries additional inventory columns (e.g.
     * `snap_date` for [[ioAgeTiering]]) through the window so every
     * consumer shares ONE live-set definition — the lineage key and
     * the generation-desc tie-break live here and nowhere else.
     */
-  def liveSetOf(durable: DataFrame, extraCols: Seq[String] = Nil): DataFrame = {
-    val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-      .orderBy(col("generation").desc)
+  def liveSetOf(durable: DataFrame, extraCols: Seq[String] = Nil): DataFrame =
     durable
-      .withColumn("rn", row_number().over(w))
+      .withColumn("rn", row_number().over(lineage.orderBy(col("generation").desc)))
       .filter(col("rn") === 1)
       .select(Seq("cf", "node_id", "shard_id", "generation", "path", "size_bytes")
         .++(extraCols).map(col): _*)
-      .orderBy(col("cf"), col("node_id"), col("shard_id"))
-  }
+
+  /** The live set as of a snapshot day: the lineage heads among
+    * durable files that existed by `day` (time travel).
+    */
+  private def liveAt(spark: SparkSession, dir: String, day: String): DataFrame =
+    liveSetOf(FileInventory.durable(spark, dir)
+      .filter(col("snap_date") <= lit(day).cast("date")))
+
+  /** Ordered dump of a per-lineage frame. */
+  private def byLineage(df: DataFrame): DataFrame =
+    df.orderBy(col("cf"), col("node_id"), col("shard_id"))
 
   /** §2.1#3 — temp-file accounting per cf (reference:
     * `Watcher.isTempFile` exclusion). Pure partial aggregate.
@@ -73,27 +86,28 @@ object SyncOps {
 
   /** [[syncDiffUpload]] over ANY (durable, target) inventory pair. */
   def diffUploadOf(durable: DataFrame, target: DataFrame): DataFrame =
-    durable
-      .join(target.select(col("path")), Seq("path"), "left_anti")
+    pendingOf(durable, target)
       .select(col("path"), col("cf"), col("node_id"), col("generation"), col("size_bytes"))
       .orderBy(col("generation"))
+
+  /** The pending-upload backlog: durable files absent from the target,
+    * every inventory column kept, unordered — the one anti-join behind
+    * the diff, skip-vanished, oldest-pending, catch-up and bandwidth
+    * operators.
+    */
+  private def pendingOf(durable: DataFrame, target: DataFrame): DataFrame =
+    durable.join(target.select(col("path")), Seq("path"), "left_anti")
+
+  private def pending(spark: SparkSession, dir: String): DataFrame =
+    pendingOf(FileInventory.durable(spark, dir), FileInventory.target(spark, dir))
 
   /** §2.1#5 — minimal restore set as of a snapshot day (reference:
     * `Restore.restore` picks the latest manifest ≤ now and fetches
     * only its files). Time-travel semantics: among durable files that
     * existed by the snapshot date, the max generation per lineage.
     */
-  def syncRestoreSet(spark: SparkSession, dir: String, asOf: String = "2024-01-15"): DataFrame = {
-    val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-      .orderBy(col("generation").desc)
-    FileInventory.durable(spark, dir)
-      .filter(col("snap_date") <= lit(asOf).cast("date"))
-      .withColumn("rn", row_number().over(w))
-      .filter(col("rn") === 1)
-      .select(col("cf"), col("node_id"), col("shard_id"),
-        col("generation"), col("path"), col("size_bytes"))
-      .orderBy(col("cf"), col("node_id"), col("shard_id"))
-  }
+  def syncRestoreSet(spark: SparkSession, dir: String, asOf: String = "2024-01-15"): DataFrame =
+    byLineage(liveAt(spark, dir, asOf))
 
   /** §2.1#6 — prune plan (reference README: `fsck --older-than N`):
     * durable files older than the cutoff that the current live set
@@ -102,7 +116,7 @@ object SyncOps {
     * broadcastable) live set, aggregated per cf.
     */
   def syncPrune(spark: SparkSession, dir: String, cutoff: String = "2024-01-20"): DataFrame = {
-    val live = syncLiveSet(spark, dir).select(col("path"))
+    val live = liveSetOf(FileInventory.durable(spark, dir)).select(col("path"))
     FileInventory.durable(spark, dir)
       .filter(col("snap_date") < lit(cutoff).cast("date"))
       .join(live, Seq("path"), "left_anti")
@@ -123,24 +137,15 @@ object SyncOps {
     */
   def syncManifestDiff(spark: SparkSession, dir: String,
       fromDay: String = "2024-01-10", toDay: String = "2024-01-20"): DataFrame = {
-    def liveAt(day: String): DataFrame = {
-      val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-        .orderBy(col("generation").desc)
-      FileInventory.durable(spark, dir)
-        .filter(col("snap_date") <= lit(day).cast("date"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("cf"), col("node_id"), col("shard_id"), col("generation"))
-    }
-    val newer = liveAt(toDay)
-    val older = liveAt(fromDay).withColumnRenamed("generation", "gen_old")
-    newer.join(older, Seq("cf", "node_id", "shard_id"), "left_outer")
+    val newer = liveAt(spark, dir, toDay)
+    val older = liveAt(spark, dir, fromDay)
+      .select(col("cf"), col("node_id"), col("shard_id"), col("generation").as("gen_old"))
+    byLineage(newer.join(older, Seq("cf", "node_id", "shard_id"), "left_outer")
       .select(col("cf"), col("node_id"), col("shard_id"),
         col("gen_old"), col("generation").as("gen_new"),
         when(col("gen_old").isNull, lit("added"))
           .when(col("generation") > col("gen_old"), lit("updated"))
-          .otherwise(lit("unchanged")).as("status"))
-      .orderBy(col("cf"), col("node_id"), col("shard_id"))
+          .otherwise(lit("unchanged")).as("status")))
   }
 
   /** §2.1#76 — path parsing round-trip: recover cf/node/generation
@@ -295,20 +300,29 @@ object SyncOps {
     * the whole backlog sorted through one thread).
     */
   def syncBandwidthWindows(spark: SparkSession, dir: String,
-      capBytes: Long = 16777216L): DataFrame = {
-    // freeze the backlog once (thin metadata frame): both the span
-    // pushdown below and the banded pass read the same blocks instead
-    // of recomputing the diff-upload anti-join twice
-    val backlog = syncDiffUpload(spark, dir).cutLineage(eager = true)
-    // bounded pushdown parameter: the generation span (one metadata row)
-    val span = backlog.agg(min(col("generation")), max(col("generation"))).collect()(0)
+      capBytes: Long = 16777216L): DataFrame =
+    transferWindows(pending(spark, dir).select(col("generation"), col("size_bytes")),
+      Seq(col("generation")), capBytes)
+
+  /** Cut `backlog` (`generation`, `size_bytes`, plus any `order`
+    * columns), taken in `order`, into ≤`capBytes` transfer windows by
+    * running-total bytes, one row per window. The backlog is frozen
+    * once (a thin metadata frame): the one-row generation-span
+    * pushdown and the banded prefix sum read the same blocks instead
+    * of recomputing it. The prefix sum orders by itself, so the
+    * backlog's own order is irrelevant.
+    */
+  private def transferWindows(backlog: DataFrame, order: Seq[Column],
+      capBytes: Long): DataFrame = {
+    val frozen = backlog.cutLineage(eager = true)
+    val span = frozen.agg(min(col("generation")), max(col("generation"))).collect()(0)
     val (lo, width) =
       if (span.isNullAt(0)) (0L, 1L)
       else (span.getLong(0),
         math.max(1L, (span.getLong(1) - span.getLong(0)) / 4096L + 1L))
-    graft.analytics.Ranks.globalRankCumSum(backlog,
+    graft.analytics.Ranks.globalRankCumSum(frozen,
         expr(s"CAST((generation - $lo) div $width AS BIGINT)"),
-        Seq(col("generation")), col("size_bytes"), "__rank", "cum")
+        order, col("size_bytes"), "__rank", "cum")
       .withColumn("window_idx", expr(s"CAST((cum - 1) div $capBytes AS BIGINT)"))
       .groupBy(col("window_idx"))
       .agg(count(lit(1)).as("n_files"),
@@ -331,24 +345,9 @@ object SyncOps {
     * single-task global sort at any backlog size).
     */
   def syncRestoreBandwidth(spark: SparkSession, dir: String,
-      capBytes: Long = 16777216L, asOf: String = "2024-01-15"): DataFrame = {
-    val backlog = syncRestoreSet(spark, dir, asOf).cutLineage(eager = true)
-    val span = backlog.agg(min(col("generation")), max(col("generation"))).collect()(0)
-    val (lo, width) =
-      if (span.isNullAt(0)) (0L, 1L)
-      else (span.getLong(0),
-        math.max(1L, (span.getLong(1) - span.getLong(0)) / 4096L + 1L))
-    graft.analytics.Ranks.globalRankCumSum(backlog,
-        expr(s"CAST((generation - $lo) div $width AS BIGINT)"),
-        Seq(col("generation"), col("path")), col("size_bytes"), "__rank", "cum")
-      .withColumn("window_idx", expr(s"CAST((cum - 1) div $capBytes AS BIGINT)"))
-      .groupBy(col("window_idx"))
-      .agg(count(lit(1)).as("n_files"),
-        sum(col("size_bytes")).as("window_bytes"),
-        min(col("generation")).as("first_gen"),
-        max(col("generation")).as("last_gen"))
-      .orderBy(col("window_idx"))
-  }
+      capBytes: Long = 16777216L, asOf: String = "2024-01-15"): DataFrame =
+    transferWindows(liveAt(spark, dir, asOf).select(col("generation"), col("path"),
+      col("size_bytes")), Seq(col("generation"), col("path")), capBytes)
 
   /** §2.1#105 — replication-factor audit: on how many nodes each
     * (cf, shard) lineage is materialized — the "is every shard
@@ -372,24 +371,13 @@ object SyncOps {
     */
   def syncRestoreDelta(spark: SparkSession, dir: String,
       fromDay: String = "2024-01-10", toDay: String = "2024-01-20"): DataFrame = {
-    def liveAt(day: String): DataFrame = {
-      val w = Window.partitionBy(col("cf"), col("node_id"), col("shard_id"))
-        .orderBy(col("generation").desc)
-      FileInventory.durable(spark, dir)
-        .filter(col("snap_date") <= lit(day).cast("date"))
-        .withColumn("rn", row_number().over(w))
-        .filter(col("rn") === 1)
-        .select(col("cf"), col("node_id"), col("shard_id"),
-          col("generation"), col("path"), col("size_bytes"))
-    }
-    val newer = liveAt(toDay)
-    val older = liveAt(fromDay)
+    val newer = liveAt(spark, dir, toDay)
+    val older = liveAt(spark, dir, fromDay)
       .select(col("cf"), col("node_id"), col("shard_id"), col("generation").as("gen_old"))
-    newer.join(older, Seq("cf", "node_id", "shard_id"), "left_outer")
+    byLineage(newer.join(older, Seq("cf", "node_id", "shard_id"), "left_outer")
       .filter(col("gen_old").isNull || col("generation") > col("gen_old"))
       .select(col("cf"), col("node_id"), col("shard_id"),
-        col("generation"), col("path"), col("size_bytes"))
-      .orderBy(col("cf"), col("node_id"), col("shard_id"))
+        col("generation"), col("path"), col("size_bytes")))
   }
 
   /** §2.1#69 — skip-vanished accounting (reference:
@@ -403,9 +391,7 @@ object SyncOps {
     val lineageMax = FileInventory.durable(spark, dir)
       .groupBy(col("cf"), col("node_id"), col("shard_id"))
       .agg(max(col("generation")).as("max_gen"))
-    val planned = FileInventory.durable(spark, dir)
-      .join(FileInventory.target(spark, dir).select(col("path")), Seq("path"), "left_anti")
-    planned
+    pending(spark, dir)
       .join(lineageMax, Seq("cf", "node_id", "shard_id"))
       .groupBy(col("cf"))
       .agg(count(lit(1)).as("n_planned"),
@@ -561,19 +547,6 @@ object SyncOps {
       .orderBy(col("cf"))
   }
 
-  /** §2.1#188 — anti-entropy Merkle-range diff. Cassandra repair
-    * compares per-token-range digests between replicas and streams
-    * only the diverging ranges; the reference gets the same effect
-    * per-file by re-uploading when the SHA comparison fails
-    * (`bin/cassandra-syncer` upload path). Spark-first shape: each
-    * replica hashes its rows into 64 token buckets per cf and folds an
-    * order-independent `bit_xor` digest per bucket — a map-side
-    * combinable aggregate, so at 100 TB each replica reduces locally
-    * to 64×|cf| digest rows and the comparison exchanges digests,
-    * never data. Replica B is a deterministic perturbation of the
-    * durable set (generation % 101 lost, % 97 corrupted by one byte),
-    * giving the repair planner real work at every scale factor.
-    */
   /** §2.1#195 — tombstone GC (Cassandra `gc_grace_seconds`
     * compaction semantics) over the LWW cell model of
     * [[syncLwwMerge]]: cells shadowed by a row's newest tombstone are
@@ -615,6 +588,19 @@ object SyncOps {
       .orderBy(col("row_key"))
   }
 
+  /** §2.1#188 — anti-entropy Merkle-range diff. Cassandra repair
+    * compares per-token-range digests between replicas and streams
+    * only the diverging ranges; the reference gets the same effect
+    * per-file by re-uploading when the SHA comparison fails
+    * (`bin/cassandra-syncer` upload path). Spark-first shape: each
+    * replica hashes its rows into 64 token buckets per cf and folds an
+    * order-independent `bit_xor` digest per bucket — a map-side
+    * combinable aggregate, so at 100 TB each replica reduces locally
+    * to 64×|cf| digest rows and the comparison exchanges digests,
+    * never data. Replica B is a deterministic perturbation of the
+    * durable set (generation % 101 lost, % 97 corrupted by one byte),
+    * giving the repair planner real work at every scale factor.
+    */
   def syncMerkleDiff(spark: SparkSession, dir: String): DataFrame = {
     val dur = FileInventory.durable(spark, dir)
     val replicaB = dur
@@ -657,6 +643,60 @@ object SyncOps {
   private val RingNodes = 8
   private val RingVnodes = 16
 
+  /** The `nodes`-node ring: one (node, token) row per vnode. */
+  private def ringOf(spark: SparkSession, nodes: Int): DataFrame = {
+    import spark.implicits._
+    (0 until nodes).flatMap(n => (0 until RingVnodes).map(v =>
+      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
+      .toDF("node", "token")
+  }
+
+  /** A key's ring token (`kt`). */
+  private def keyToken(key: Column): Column = (key * 1103515245L) % RingM
+
+  /** Clockwise distance from the key token `kt` to a ring `token`. */
+  private val clockwise: Column = (col("token") - col("kt") + RingM) % RingM
+
+  /** Per-user keys with their event load and ring token. */
+  private def userKeys(spark: SparkSession, dir: String): DataFrame =
+    graft.sources.Tables.events(spark, dir)
+      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
+      .withColumn("kt", keyToken(col("user_id")))
+
+  /** RF=3 replica placement: a key's replicas are the first three
+    * DISTINCT nodes met walking clockwise from its token. The first
+    * vnode of node X a clockwise walk reaches lies at X's minimum
+    * clockwise distance, so ranking nodes by per-node min distance
+    * reproduces the distinct-node walk exactly — no iterative
+    * successor chase. `keys` holds `key`, `kt` and the `carry`
+    * columns; the result is one (key, carry, node, rk) row per
+    * replica, rk 1 the primary. The ring is broadcast, so everything
+    * runs on |keys|×|nodes| rows.
+    */
+  private def replicaRanks(keys: DataFrame, ring: DataFrame, key: String,
+      carry: Seq[String] = Nil): DataFrame = {
+    val perNode = keys.crossJoin(broadcast(ring))
+      .withColumn("dist", clockwise)
+      .groupBy((key +: carry :+ "node").map(col): _*)
+      .agg(min(col("dist")).as("mind"))
+    val w = Window.partitionBy(col(key)).orderBy(col("mind"), col("node"))
+    perNode.withColumn("rk", row_number().over(w))
+      .filter(col("rk") <= 3)
+  }
+
+  /** Per-key ownership under an `nodes`-node ring — the placement
+    * kernel behind [[syncTokenRing]], parameterized so the spec can
+    * pin the consistent-hashing contract: growing the ring by one
+    * node moves keys ONLY onto the new node, never between old ones.
+    */
+  def tokenRingPlacement(spark: SparkSession, dir: String,
+      nodes: Int = RingNodes): DataFrame =
+    userKeys(spark, dir).crossJoin(broadcast(ringOf(spark, nodes)))
+      .withColumn("dist", clockwise)
+      .groupBy(col("user_id"), col("n_events"))
+      .agg(min(struct(col("dist"), col("node"))).as("m"))
+      .select(col("m.node").as("node"), col("user_id"), col("n_events"))
+
   /** §2.1 `sync_token_ring` — consistent-hash ring placement, the
     * partition-ownership model of the reference's upstream store
     * (`/root/reference/bin/cassandra-syncer` ships SSTables whose
@@ -669,27 +709,6 @@ object SyncOps {
     * is the entire point of consistent hashing; the spec pins that
     * re-placement delta.
     */
-  /** Per-key ownership under an `nodes`-node ring — the placement
-    * kernel behind [[syncTokenRing]], parameterized so the spec can
-    * pin the consistent-hashing contract: growing the ring by one
-    * node moves keys ONLY onto the new node, never between old ones.
-    */
-  def tokenRingPlacement(spark: SparkSession, dir: String,
-      nodes: Int = RingNodes): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until nodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("user_id"), col("n_events"))
-      .agg(min(struct(col("dist"), col("node"))).as("m"))
-      .select(col("m.node").as("node"), col("user_id"), col("n_events"))
-  }
-
   def syncTokenRing(spark: SparkSession, dir: String): DataFrame =
     tokenRingPlacement(spark, dir)
       .groupBy(col("node"))
@@ -697,38 +716,19 @@ object SyncOps {
       .orderBy(col("node"))
 
   /** §2.1 `sync_replica_sets` — RF=3 replica placement on the token
-    * ring: a key's replicas are the first three DISTINCT nodes met
-    * walking clockwise from its token. The first vnode of node X a
-    * clockwise walk reaches lies at X's minimum clockwise distance,
-    * so ranking nodes by per-node min distance reproduces the
-    * distinct-node walk exactly — no iterative successor chase. Per
-    * node: primary keys, total replica keys, and primary event load.
-    * Everything after the one fact-table aggregation happens on
-    * |keys|×|nodes| rows with a broadcast 128-row ring.
+    * ring ([[replicaRanks]]). Per node: primary keys, total replica
+    * keys, and primary event load. Everything after the one
+    * fact-table aggregation happens on |keys|×|nodes| rows with a
+    * broadcast 128-row ring.
     */
-  def syncReplicaSets(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until RingNodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    val perNode = keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("user_id"), col("n_events"), col("node"))
-      .agg(min(col("dist")).as("mind"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("mind"), col("node"))
-    perNode.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+  def syncReplicaSets(spark: SparkSession, dir: String): DataFrame =
+    replicaRanks(userKeys(spark, dir), ringOf(spark, RingNodes), "user_id", Seq("n_events"))
       .groupBy(col("node"))
       .agg(sum(when(col("rk") === 1, 1L).otherwise(0L)).as("n_primary"),
         count(lit(1)).as("n_replica"),
         sum(when(col("rk") === 1, col("n_events")).otherwise(0L))
           .as("primary_events"))
       .orderBy(col("node"))
-  }
 
   /** §2.1 `sync_ring_rebalance` — node-addition movement plan: the
     * RF=3 placement ([[syncReplicaSets]]) recomputed with a ninth
@@ -742,26 +742,12 @@ object SyncOps {
     * anti-join diff per direction — all metadata-scale.
     */
   def syncRingRebalance(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    def ringOf(nodes: Int): DataFrame =
-      (0 until nodes).flatMap(n => (0 until RingVnodes).map(v =>
-        (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-        .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .select(col("user_id")).distinct()
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    def placement(ring: DataFrame): DataFrame = {
-      val perNode = keys.crossJoin(broadcast(ring))
-        .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-        .groupBy(col("user_id"), col("node"))
-        .agg(min(col("dist")).as("mind"))
-      val w = Window.partitionBy(col("user_id")).orderBy(col("mind"), col("node"))
-      perNode.withColumn("rk", row_number().over(w))
-        .filter(col("rk") <= 3)
+    val keys = userKeys(spark, dir).select(col("user_id"), col("kt"))
+    def placement(nodes: Int): DataFrame =
+      replicaRanks(keys, ringOf(spark, nodes), "user_id")
         .select(col("user_id"), col("node"))
-    }
-    val before = placement(ringOf(RingNodes)).cutLineage()
-    val after = placement(ringOf(RingNodes + 1)).cutLineage()
+    val before = placement(RingNodes).cutLineage()
+    val after = placement(RingNodes + 1).cutLineage()
     val gained = after.join(before, Seq("user_id", "node"), "left_anti")
       .groupBy(col("node")).agg(count(lit(1)).as("keys_gained"))
     val lost = before.join(after, Seq("user_id", "node"), "left_anti")
@@ -792,22 +778,12 @@ object SyncOps {
     * and the ring/replica side is broadcast metadata throughout.
     */
   def cassReadRepair(spark: SparkSession, dir: String): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until RingNodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
     val cells = graft.sources.Tables.events(spark, dir).select(
       (col("user_id") % 50).cast("long").as("row_key"),
       col("ts").as("write_ts"), col("event_id").as("generation"))
     val keys = cells.select(col("row_key")).distinct()
-      .withColumn("kt", (col("row_key") * 1103515245L) % RingM)
-    val perNode = keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("row_key"), col("node"))
-      .agg(min(col("dist")).as("mind"))
-    val wRk = Window.partitionBy(col("row_key")).orderBy(col("mind"), col("node"))
-    val replicas = perNode.withColumn("rk", row_number().over(wRk))
-      .filter(col("rk") <= 3)
+      .withColumn("kt", keyToken(col("row_key")))
+    val replicas = replicaRanks(keys, ringOf(spark, RingNodes), "row_key")
       .select(col("row_key"), col("rk"), col("node"))
     // per-replica applied set → per-replica LWW head (one window on
     // the (row_key, rk) shuffle; the replicas dim broadcasts)
@@ -859,22 +835,8 @@ object SyncOps {
     * the ≤3 replica rows per key.
     */
   def syncHintedHandoff(spark: SparkSession, dir: String,
-      downNode: Long = 3L): DataFrame = {
-    import spark.implicits._
-    val ring = (0 until RingNodes).flatMap(n => (0 until RingVnodes).map(v =>
-      (n.toLong, ((n * RingVnodes + v) * 2654435761L) % RingM)))
-      .toDF("node", "token")
-    val keys = graft.sources.Tables.events(spark, dir)
-      .groupBy(col("user_id")).agg(count(lit(1)).as("n_events"))
-      .withColumn("kt", (col("user_id") * 1103515245L) % RingM)
-    val perNode = keys.crossJoin(broadcast(ring))
-      .withColumn("dist", (col("token") - col("kt") + RingM) % RingM)
-      .groupBy(col("user_id"), col("n_events"), col("node"))
-      .agg(min(col("dist")).as("mind"))
-    val w = Window.partitionBy(col("user_id"))
-      .orderBy(col("mind"), col("node"))
-    perNode.withColumn("rk", row_number().over(w))
-      .filter(col("rk") <= 3)
+      downNode: Long = 3L): DataFrame =
+    replicaRanks(userKeys(spark, dir), ringOf(spark, RingNodes), "user_id", Seq("n_events"))
       .groupBy(col("user_id"), col("n_events"))
       .agg(max(when(col("node") === downNode, 1L).otherwise(0L)).as("affected"),
         min(when(col("node") =!= downNode, struct(col("rk"), col("node"))))
@@ -883,7 +845,6 @@ object SyncOps {
       .groupBy(col("live.node").as("node"))
       .agg(count(lit(1)).as("n_hints"), sum(col("n_events")).as("hinted_events"))
       .orderBy(col("node"))
-  }
 
   /** §2.1#272 — backlog age per column family: among durable files
     * the target is still missing ([[diffUploadOf]]'s anti-join
@@ -895,9 +856,7 @@ object SyncOps {
     * as exact epoch-µs longs.
     */
   def syncOldestPending(spark: SparkSession, dir: String): DataFrame =
-    FileInventory.durable(spark, dir)
-      .join(FileInventory.target(spark, dir).select(col("path")),
-        Seq("path"), "left_anti")
+    pending(spark, dir)
       .groupBy(col("cf"))
       .agg(count(lit(1)).as("n_pending"),
         sum(col("size_bytes")).as("pending_bytes"),
@@ -917,18 +876,17 @@ object SyncOps {
     * single-mtime history yields a null rate/ETA, not a fake zero.
     */
   def syncCatchupEta(spark: SparkSession, dir: String): DataFrame = {
-    val dur = FileInventory.durable(spark, dir)
-    val target = FileInventory.target(spark, dir).select(col("path"))
-    val pending = dur.join(target, Seq("path"), "left_anti")
+    val backlog = pending(spark, dir)
       .groupBy(col("cf"))
       .agg(count(lit(1)).as("n_pending"),
         sum(col("size_bytes")).as("pending_bytes"))
-    val done = dur.join(target, Seq("path"), "left_semi")
+    val done = FileInventory.durable(spark, dir)
+      .join(FileInventory.target(spark, dir).select(col("path")), Seq("path"), "left_semi")
       .groupBy(col("cf"))
       .agg(sum(col("size_bytes")).as("done_bytes"),
         (max(unix_micros(col("mtime"))) - min(unix_micros(col("mtime"))))
           .as("span_us"))
-    pending.join(done, Seq("cf"), "left_outer")
+    backlog.join(done, Seq("cf"), "left_outer")
       .select(col("cf"), col("n_pending"), col("pending_bytes"),
         col("done_bytes"),
         (col("done_bytes").cast("double") * 1e6 /

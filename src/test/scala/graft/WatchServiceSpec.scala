@@ -26,7 +26,7 @@ class WatchServiceSpec extends GraftSpec {
     mkFile(data, "ks1/click/node1/na-10-Data.db", 100)
     mkFile(data, "ks1/click/node1/na-11-Data.db", 200)
     mkFile(data, "ks1/error/node2/na-12-tmp-Data.db", 50) // in-flight temp
-    WatchService.runOnce(spark, data, url)
+    WatchService.runOnceAll(spark, Seq(data), url)
     val m = WatchService.manifest(spark, url).collect()
     assert(m.length === 2)
     assert(m.forall(_.getAs[String]("status") === "uploaded"))
@@ -40,9 +40,9 @@ class WatchServiceSpec extends GraftSpec {
   test("watch daemon: a second pass uploads only new arrivals (checkpoint resume)") {
     val (data, url) = freshDirs("incr")
     mkFile(data, "ks1/click/node1/na-20-Data.db", 10)
-    WatchService.runOnce(spark, data, url)
+    WatchService.runOnceAll(spark, Seq(data), url)
     mkFile(data, "ks1/view/node3/na-21-Data.db", 20)
-    WatchService.runOnce(spark, data, url) // same checkpoint → incremental
+    WatchService.runOnceAll(spark, Seq(data), url) // same checkpoint → incremental
     val m = WatchService.manifest(spark, url)
     assert(m.count() === 2)
     // the new file arrived in a later batch than the initial one
@@ -77,7 +77,7 @@ class WatchServiceSpec extends GraftSpec {
     mkFile(data, "ks1/click/node1/na-40-Data.db", 64)
     mkFile(data, "ks1/click/node1/na-41-Data.db", 64)
     mkFile(data, "ks1/view/node2/na-42-Data.db", 32)
-    WatchService.runOnce(spark, data, url)
+    WatchService.runOnceAll(spark, Seq(data), url)
     // pristine store: everything verifies ok with a real digest
     val clean = WatchService.fsckVerify(spark, url).collect()
     assert(clean.length === 3)
@@ -137,7 +137,7 @@ class WatchServiceSpec extends GraftSpec {
     val (data, url) = freshDirs("opts")
     mkFile(data, "ks1/click/node1/na-40-Data.db", 10)
     mkFile(data, "ks1/click/node1/na-41-Data.db", 10)
-    val q = WatchService.start(spark, data, url,
+    val q = WatchService.startAll(spark, Seq(data), url,
       org.apache.spark.sql.streaming.Trigger.AvailableNow(), None,
       Map("maxFilesPerTrigger" -> "1"))
     try q.awaitTermination() finally q.stop()
@@ -187,5 +187,66 @@ class WatchServiceSpec extends GraftSpec {
     // a third pass with nothing new writes nothing new
     WatchService.runOnceDedupGated(spark, Seq(data), url)
     assert(WatchService.dedupManifest(spark, url).count() === 4)
+  }
+
+  test("dedup-gated watch: a keeper that vanishes before its copy is not accepted or indexed") {
+    val (data, url) = freshDirs("dvanish")
+    val t = Target.parse(url)
+    import spark.implicits._
+    def arrivals(rel: String) =
+      Seq((s"file:$data/$rel", Files.size(Paths.get(data, rel)))).toDF("path", "length")
+    val first = "ks1/click/node1/na-50-Data.db"
+    mkFile(data, first, 70)
+    val verdicts = WatchService.dedupGate(arrivals(first), Seq(data), t, 0L)
+    assert(verdicts.select(col("verdict")).as[String].collect().toSeq === Seq("accepted"))
+    // compaction deletes the keeper between the hash pass and the copy
+    Files.delete(Paths.get(data, first))
+    WatchService.dedupApply(verdicts, t, 0L)
+    val m0 = WatchService.dedupManifest(spark, url).collect()
+    assert(m0.map(_.getAs[String]("verdict")).toSeq === Seq("skipped_vanished"))
+    assert(!Files.exists(Paths.get(t.objectsPath, first)))
+    def index() = spark.read.option("recursiveFileLookup", "true")
+      .parquet(t.dedupIndexPath).toDF("digest", "keeper_path")
+      .select(col("keeper_path")).as[String].collect().toSeq
+    assert(index().isEmpty, "a keeper whose bytes never landed must not be indexed")
+    // a later byte-identical file becomes the keeper, and its bytes land
+    val later = "ks1/view/node2/na-51-Data.db"
+    mkFile(data, later, 70)
+    WatchService.dedupGatedBatch(arrivals(later), Seq(data), t, 1L)
+    val m1 = WatchService.dedupManifest(spark, url).filter(col("batch_id") === 1L).collect()
+    assert(m1.map(_.getAs[String]("verdict")).toSeq === Seq("accepted"))
+    assert(Files.size(Paths.get(t.objectsPath, later)) === 70L)
+    assert(index() === Seq(later))
+  }
+
+  test("upload, fsck and dedup digests equal a JDK MD5 on files of several 64 KiB reads") {
+    // the batch bodies are driven directly: Spark's file scan never
+    // lists zero-length files, so the stream would not carry the 0 B one
+    val (data, url) = freshDirs("sizes")
+    val rnd = new scala.util.Random(17)
+    val expected = Seq(0, 1, 65535, 65536, 65537, 200 * 1024 + 7).zipWithIndex.map {
+      case (n, i) =>
+        val rel = s"ks1/click/node1/na-${60 + i}-Data.db"
+        val bytes = new Array[Byte](n)
+        rnd.nextBytes(bytes)
+        val p = Paths.get(data, rel)
+        Files.createDirectories(p.getParent)
+        Files.write(p, bytes)
+        rel -> java.security.MessageDigest.getInstance("MD5").digest(bytes)
+          .map("%02x".format(_)).mkString
+    }.toMap
+    import spark.implicits._
+    val batch = expected.keys.toSeq
+      .map(rel => (s"file:$data/$rel", Files.size(Paths.get(data, rel))))
+      .toDF("path", "length")
+    def byPath(df: org.apache.spark.sql.DataFrame, digest: String) =
+      df.select(col("path"), col(digest)).collect()
+        .map(r => r.getString(0) -> r.getString(1)).toMap
+    WatchService.uploadBatch(batch, Seq(data), Target.parse(url), 0L)
+    assert(byPath(WatchService.manifest(spark, url), "md5") === expected)
+    assert(byPath(WatchService.fsckVerify(spark, url), "actual_md5") === expected)
+    val (_, dedupUrl) = freshDirs("sizes_dedup")
+    WatchService.dedupGatedBatch(batch, Seq(data), Target.parse(dedupUrl), 0L)
+    assert(byPath(WatchService.dedupManifest(spark, dedupUrl), "digest") === expected)
   }
 }
